@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
+from env_event_stream_spark.storage.parquet_rows import append_rows
 
 DLQ_SCHEMA = T.StructType(
     [
@@ -182,8 +183,11 @@ class ParquetDeadLetterQueue:
         return False
 
     def _append(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, schema=DLQ_SCHEMA)
-        df.write.mode("append").parquet(self.path)
+        """Append entry versions as one parquet file, written from the
+        driver (``append_rows``: checked like ``createDataFrame``, no
+        Spark job) — dead letters are driver-held rows by
+        construction."""
+        append_rows(self.path, rows, DLQ_SCHEMA)
 
     def add_event(self, event: Row, error: str, subscription: str) -> None:
         self.add_events([(event, error, subscription)])

@@ -2,9 +2,12 @@
 
 Reference parity (SURVEY.md §2.1):
 - ``save_event``/``save_events`` = InMemory/File/Postgres ``saveEvent``
-  (reference src/persistence.ts:14-23, :141-145, :299-322) — here a
-  columnar append, vectorized, one commit for a whole batch (the
-  reference loops one event at a time).
+  (reference src/persistence.ts:14-23, :141-145, :299-322) — here one
+  columnar append for a whole batch (the reference loops one event at
+  a time). Rows the driver holds are written by the driver
+  (``parquet_rows.append_rows``: pyarrow, no Spark job), one parquet
+  file per topic per call; a DataFrame is written by Spark's
+  ``partitionBy`` writer.
 - ``get_events``            = ``getEvents``  (src/persistence.ts:28-69)
 - ``delete_events``         = ``deleteEvents`` retention
   (src/persistence.ts:74-93) — implemented as partition-pruned rewrite
@@ -36,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
+from env_event_stream_spark.storage.parquet_rows import append_rows, partition_dir
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -48,6 +52,10 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+
+# what a topic partition's files hold: the partition value lives in
+# the directory name
+_FILE_SCHEMA = T.StructType([f for f in EVENT_SCHEMA.fields if f.name != "topic"])
 
 __all__ = ["EVENT_SCHEMA", "make_event", "InMemoryEventStore", "ParquetEventStore"]
 
@@ -167,8 +175,11 @@ class InMemoryEventStore:
 class ParquetEventStore:
     """System-of-record backend: parquet partitioned by topic.
 
-    Append = vectorized columnar write; scan = pruned parquet read;
-    retention delete = partition-local rewrite keeping ``ts >= cutoff``
+    Append = columnar write: driver-held rows are written by the
+    driver (``append_rows``, no Spark job), one parquet file per topic
+    per call; a DataFrame by Spark's ``partitionBy`` writer into the
+    same directories. Scan = pruned parquet read. Retention delete =
+    partition-local rewrite keeping ``ts >= cutoff``
     (the parquet analog of the Postgres ``DELETE WHERE topic=$1 AND
     timestamp<$2``, reference src/persistence.ts:407-425)."""
 
@@ -177,12 +188,15 @@ class ParquetEventStore:
         self.path = path
 
     def initialize(self) -> None:
-        """DDL bootstrap (reference src/persistence.ts:260-294): write
-        an empty partitioned table if absent. Indexes have no parquet
-        analog — partitioning + min/max stats play that role."""
-        if not os.path.exists(self.path):
-            empty = self.spark.createDataFrame([], schema=EVENT_SCHEMA)
-            empty.write.mode("overwrite").partitionBy("topic").parquet(self.path)
+        """DDL bootstrap (reference src/persistence.ts:260-294): create
+        the table directory; readers treat a directory without parquet
+        files as the empty table. Indexes have no parquet analog —
+        partitioning + min/max stats play that role."""
+        os.makedirs(self.path, exist_ok=True)
+
+    def partition_dir(self, topic: str) -> str:
+        """The topic's partition directory, escaped as Spark names it."""
+        return partition_dir(self.path, "topic", topic)
 
     def _exists(self) -> bool:
         if not os.path.isdir(self.path):
@@ -194,13 +208,10 @@ class ParquetEventStore:
 
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
         if isinstance(events, DataFrame):
-            df = events
-            n = df.count()
-        else:
-            df = self.spark.createDataFrame(list(events), schema=EVENT_SCHEMA)
-            n = len(events)
-        df.write.mode("append").partitionBy("topic").parquet(self.path)
-        return n
+            n = events.count()
+            events.write.mode("append").partitionBy("topic").parquet(self.path)
+            return n
+        return append_rows(self.path, events, EVENT_SCHEMA, partition="topic")
 
     def save_event(self, event: Row) -> None:
         self.save_events([event])
@@ -224,15 +235,32 @@ class ParquetEventStore:
             tiebreak_col="id", **kwargs,
         )
 
+    def stream_topic(self, topic: str) -> DataFrame:
+        """Streaming read of one topic, in EVENT_SCHEMA order. It
+        watches the topic's own directory (created if absent) and adds
+        ``topic`` back as a literal: a file source over the whole table
+        started before the topic's first write has no ``topic``
+        partition column, and its first batch then fails plan
+        validation; it would also list every other topic's files."""
+        part_dir = self.partition_dir(topic)
+        os.makedirs(part_dir, exist_ok=True)
+        return (
+            self.spark.readStream.schema(_FILE_SCHEMA)
+            .parquet(part_dir)
+            .withColumn("topic", F.lit(topic))
+            .select(*EVENT_SCHEMA.fieldNames())
+        )
+
     def compact(self, topic: str, target_files: int = 1) -> int:
         """Rewrite a topic partition into ``target_files`` files.
 
-        High-frequency single-event publishes accumulate one file per
-        append — the same small-files pathology as the reference's
+        Every append writes one file per topic it touches, so
+        high-frequency single-event publishes accumulate one file per
+        event — the same small-files pathology as the reference's
         one-JSON-per-event store (src/persistence.ts:141-145), which
         at 100 TB destroys scan throughput (footer reads dominate).
         Run periodically alongside retention. Returns files removed."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self.partition_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         before = sum(
@@ -253,7 +281,7 @@ class ParquetEventStore:
         delete, no scan of other topics (reference src/broker.ts:55-57
         only forgets the Topic object; dropping its stored rows is the
         documented upgrade)."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self.partition_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         n = self.to_df().where(F.col("topic") == topic).count()
@@ -267,7 +295,7 @@ class ParquetEventStore:
 
     def delete_events(self, topic: str, before_ts) -> int:
         """Retention: rewrite only the affected topic partition."""
-        part_dir = os.path.join(self.path, f"topic={topic}")
+        part_dir = self.partition_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         full = self.to_df().where(F.col("topic") == topic).cache()
@@ -290,7 +318,7 @@ def _erase_matching_parquet(store: "ParquetEventStore", topic: str,
     NOT matching ``predicate`` (a Column over the event schema). The
     GDPR/right-to-erasure primitive — same rewrite shape as retention
     delete_events, arbitrary predicate."""
-    part_dir = os.path.join(store.path, f"topic={topic}")
+    part_dir = store.partition_dir(topic)
     if not os.path.isdir(part_dir):
         return 0
     full = store.to_df().where(F.col("topic") == topic).cache()

@@ -355,8 +355,6 @@ class EventBroker:
         sub_id = options.name or f"sub-{uuid.uuid4().hex[:8]}"
         sub = _Subscription(sub_id, topic, handler or (lambda r: None), options)
 
-        from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
-
         def process(df: DataFrame, epoch_id: int) -> None:
             if batch_handler is not None:
                 batch_handler(df, epoch_id)
@@ -367,12 +365,7 @@ class EventBroker:
         def _start():
             # build a FRESH plan per (re)start — reusing one streaming
             # DataFrame across runs trips PLAN_VALIDATION_FAILED
-            stream = (
-                self.spark.readStream.schema(EVENT_SCHEMA)
-                .option("basePath", f"{self.path}/events")
-                .parquet(f"{self.path}/events")
-                .where(F.col("topic") == topic)
-            )
+            stream = self.store.stream_topic(topic)
             if options.event_types:
                 stream = stream.where(
                     F.col("type").isin(list(options.event_types))

@@ -3,6 +3,8 @@ checkpointed resume, watermarked windows."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -76,6 +78,34 @@ def test_streaming_retry_to_dlq(pbroker, tmp_path):
     assert len(entries) == 1
     assert entries[0].subscription == "fsub"
     assert entries[0].error == "handler down"
+
+
+def test_live_subscription_started_before_topic_first_write(pbroker, tmp_path):
+    """A live subscription on a fresh broker, started before any topic
+    has data, survives a write to another topic and then delivers its
+    own topic's events (a source over the whole table would fail plan
+    validation on its first batch)."""
+    seen = []
+    sid = pbroker.subscribe_streaming(
+        "late",
+        lambda df, _epoch: seen.extend(r.id for r in df.select("id").collect()),
+        checkpoint=str(tmp_path / "late-ckpt"),
+        trigger_once=False,
+    )
+    q = pbroker.subscriptions[sid].query
+    try:
+        pbroker.publish_many("other", [("a", {"i": 0}, None)])
+        q.processAllAvailable()
+        ids = [pbroker.publish("late", "a", {"i": 1}).event_id]
+        pbroker.publish_many("late", [("b", {"i": i}, None) for i in range(2, 5)])
+        ids += [r.id for r in pbroker.store.get_events("late", event_types=["b"]).collect()]
+        deadline = time.time() + 60
+        while len(seen) < len(ids) and time.time() < deadline:
+            q.processAllAvailable()
+        assert q.isActive, q.exception()
+        assert sorted(seen) == sorted(ids)
+    finally:
+        pbroker.unsubscribe(sid)
 
 
 def test_pause_resume_streaming_restarts(pbroker, tmp_path):
