@@ -94,28 +94,34 @@ def get_spark(app_name: str = "env_event_stream_spark") -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    # Ephemeral-checkpoint filesystem (r17, VERDICT r16 item 5): a
-    # RawLocalFileSystem subclass whose setPermission is a no-op,
-    # registered under the dedicated scheme nochmod:// — without
-    # libhadoop, every permission-carrying file create in a streaming
-    # checkpoint FORKS /bin/chmod (hundreds of fork+exec per
-    # availableNow run, measured). Registering the scheme is inert by
-    # itself; only the streaming helpers' per-query ephemeral
-    # checkpoint dirs opt in (env-fenced there via
-    # SPARK_GRAFT_CKPT_FS), and only when this jar is on the
-    # classpath. Durable deployments never see it: no restorable path
-    # uses the scheme and fs.defaultFS is untouched.
+    # Ephemeral-checkpoint filesystem: a RawLocalFileSystem subclass
+    # whose setPermission is a no-op, registered under the dedicated
+    # scheme nochmod:// — without libhadoop, every permission-carrying
+    # file create in a streaming checkpoint FORKS /bin/chmod (hundreds
+    # of fork+exec per availableNow run, measured). Registering the
+    # scheme is inert by itself; only the catalog's availableNow runner
+    # (streaming_queries._run_available_now) opts in, for its
+    # per-query ephemeral checkpoint AND sink tmpdirs, and only when
+    # this jar is on the classpath. Durable paths never see it: no
+    # restorable path uses the scheme and fs.defaultFS is untouched.
+    # LOCAL-MASTER ASSUMPTION: executors share the driver JVM, so the
+    # driver class path entry is the one that loads the jar. The
+    # executor entry only helps a cluster whose workers hold the jar
+    # at this same path. Both values replace any set in
+    # spark-defaults.conf.
     _nochmod_jar = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "jars",
         "spark-graft-nochmodfs.jar",
     )
     if os.path.exists(_nochmod_jar):
-        builder = builder.config(
-            "spark.driver.extraClassPath", _nochmod_jar
-        ).config(
-            "spark.hadoop.fs.nochmod.impl",
-            "sparkgraft.NoChmodLocalFileSystem",
+        builder = (
+            builder.config("spark.driver.extraClassPath", _nochmod_jar)
+            .config("spark.executor.extraClassPath", _nochmod_jar)
+            .config(
+                "spark.hadoop.fs.nochmod.impl",
+                "sparkgraft.NoChmodLocalFileSystem",
+            )
         )
     # Invariance-sweep hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides
     # any default above (applied last). This is how the catalog-wide

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.storage.event_store import EVENT_SCHEMA
-from env_event_stream_spark.storage.parquet_rows import append_rows
+from env_event_stream_spark.storage.parquet_rows import append_rows, has_parquet_files
 
 DLQ_SCHEMA = T.StructType(
     [
@@ -174,14 +174,6 @@ class ParquetDeadLetterQueue:
         self.spark = spark
         self.path = path
 
-    def _exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for _root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
     def _append(self, rows: list[tuple]) -> None:
         """Append entry versions as one parquet file, written from the
         driver (``append_rows``: checked like ``createDataFrame``, no
@@ -201,7 +193,7 @@ class ParquetDeadLetterQueue:
         )
 
     def _raw(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet_files(self.path):
             return self.spark.createDataFrame([], schema=DLQ_SCHEMA)
         return self.spark.read.schema(DLQ_SCHEMA).parquet(self.path)
 

@@ -39,7 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from env_event_stream_spark.operators.event_queries import get_events as _get_events_df
-from env_event_stream_spark.storage.parquet_rows import append_rows, partition_dir
+from env_event_stream_spark.storage.parquet_rows import (
+    append_rows,
+    has_parquet_files,
+    partition_dir,
+)
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -198,14 +202,6 @@ class ParquetEventStore:
         """The topic's partition directory, escaped as Spark names it."""
         return partition_dir(self.path, "topic", topic)
 
-    def _exists(self) -> bool:
-        if not os.path.isdir(self.path):
-            return False
-        for root, _dirs, files in os.walk(self.path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
     def save_events(self, events: Sequence[Row] | DataFrame) -> int:
         if isinstance(events, DataFrame):
             n = events.count()
@@ -217,7 +213,7 @@ class ParquetEventStore:
         self.save_events([event])
 
     def to_df(self) -> DataFrame:
-        if not self._exists():
+        if not has_parquet_files(self.path):
             return self.spark.createDataFrame([], schema=EVENT_SCHEMA)
         # partitioned reads append the partition column last; re-select
         # to the canonical field order so collected Rows align with
@@ -289,20 +285,24 @@ class ParquetEventStore:
         return n
 
     def delete_matching(self, topic: str, predicate) -> int:
-        """Erase rows of a topic matching a Column predicate —
-        partition-local rewrite (_erase_matching_parquet)."""
-        return _erase_matching_parquet(self, topic, predicate)
-
-    def delete_events(self, topic: str, before_ts) -> int:
-        """Retention: rewrite only the affected topic partition."""
+        """Erase rows of a topic matching ``predicate`` (a Column over
+        the event schema): rewrite only that topic's partition, keeping
+        the other rows, and skip the rewrite when nothing matches. The
+        GDPR/right-to-erasure primitive and retention's rewrite.
+        Returns rows removed."""
         part_dir = self.partition_dir(topic)
         if not os.path.isdir(part_dir):
             return 0
         full = self.to_df().where(F.col("topic") == topic).cache()
         try:
             total = full.count()
-            keep = full.where(~(F.col("timestamp") < F.lit(before_ts)))
+            # NULL-predicate rows (e.g. payloads lacking the probed JSON
+            # field) must be KEPT: where(~NULL) would silently drop them —
+            # the one data-loss trap a generic erase primitive must close
+            keep = full.where(~F.coalesce(predicate, F.lit(False)))
             kept = keep.count()
+            if kept == total:
+                return 0
             tmp = part_dir + ".tmp"
             keep.drop("topic").write.mode("overwrite").parquet(tmp)
             shutil.rmtree(part_dir)
@@ -311,30 +311,6 @@ class ParquetEventStore:
         finally:
             full.unpersist()
 
-
-def _erase_matching_parquet(store: "ParquetEventStore", topic: str,
-                            predicate) -> int:
-    """Partition-local erase: rewrite one topic partition keeping rows
-    NOT matching ``predicate`` (a Column over the event schema). The
-    GDPR/right-to-erasure primitive — same rewrite shape as retention
-    delete_events, arbitrary predicate."""
-    part_dir = store.partition_dir(topic)
-    if not os.path.isdir(part_dir):
-        return 0
-    full = store.to_df().where(F.col("topic") == topic).cache()
-    try:
-        total = full.count()
-        # NULL-predicate rows (e.g. payloads lacking the probed JSON
-        # field) must be KEPT: where(~NULL) would silently drop them —
-        # the one data-loss trap a generic erase primitive must close
-        keep = full.where(~F.coalesce(predicate, F.lit(False)))
-        kept = keep.count()
-        if kept == total:
-            return 0
-        tmp = part_dir + ".tmp"
-        keep.drop("topic").write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(part_dir)
-        os.rename(tmp, part_dir)
-        return total - kept
-    finally:
-        full.unpersist()
+    def delete_events(self, topic: str, before_ts) -> int:
+        """Retention: erase the topic's events older than ``before_ts``."""
+        return self.delete_matching(topic, F.col("timestamp") < F.lit(before_ts))

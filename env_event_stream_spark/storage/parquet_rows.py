@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_converter, _make_type_verifier
 
-__all__ = ["append_rows", "escape_path_name", "partition_dir"]
+__all__ = ["append_rows", "escape_path_name", "has_parquet_files", "partition_dir"]
 
 # Spark's ExternalCatalogUtils.charToEscape (non-Windows): control
 # characters 0x01-0x1F and 0x7F plus these punctuation marks
@@ -55,6 +55,15 @@ def partition_dir(path: str, column: str, value: str | None) -> str:
     partition."""
     name = escape_path_name(value) if value else DEFAULT_PARTITION_NAME
     return os.path.join(path, f"{escape_path_name(column)}={name}")
+
+
+def has_parquet_files(path: str) -> bool:
+    """Whether any file under ``path`` ends in ``.parquet``. Readers
+    treat a missing directory, or one with no parquet file yet, as the
+    empty table."""
+    return any(
+        f.endswith(".parquet") for _root, _dirs, files in os.walk(path) for f in files
+    )
 
 
 def append_rows(

@@ -3,11 +3,11 @@
 Without libhadoop, RawLocalFileSystem forks /bin/chmod per
 permission-carrying file create; jars/spark-graft-nochmodfs.jar
 (source: jvm/src) registers `nochmod://` — a RawLocalFileSystem whose
-setPermission is a no-op — and the streaming helpers route their
-per-query ephemeral checkpoint/sink tmpdirs through it. These tests
-pin (a) byte-faithful parquet round-trips through the scheme, (b) the
-_ckpt_path resolution/fallback contract the streaming family depends
-on. If the jar is absent (e.g. a plain driversim session), everything
+setPermission is a no-op — and the catalog's availableNow runner
+routes its per-query ephemeral checkpoint/sink tmpdirs through it.
+These tests pin (a) byte-faithful parquet round-trips through the
+scheme, (b) the _ckpt_path resolution/fallback contract the streaming
+family depends on. If the jar is absent (e.g. a plain driversim session), everything
 must degrade to plain local paths — never fail a query."""
 
 from __future__ import annotations
@@ -60,9 +60,7 @@ def test_nochmod_parquet_roundtrip_is_byte_faithful(spark):
 def test_ckpt_path_resolves_or_falls_back(spark):
     d = tempfile.mkdtemp(prefix="nochmod_cp_")
     got = SQ._ckpt_path(spark, d)
-    if SQ._CKPT_FS in ("", "file", "default") or not _scheme_available(
-        spark
-    ):
-        assert got == d  # plain path: the query must still run
+    if _scheme_available(spark):
+        assert got == f"nochmod://{d}"
     else:
-        assert got == f"{SQ._CKPT_FS}://{d}"
+        assert got == d  # plain path: the query must still run

@@ -285,3 +285,39 @@ def test_stream_shuffle_parts_scoped_and_restored(spark, sf_dir):
         SQ._stream_shuffle_parts = orig
     assert seen["during"] == SQ._STREAM_PARTS
     assert spark.conf.get(key) == before
+
+
+def test_available_now_runner_deletes_checkpoints_keeps_sinks(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each availableNow run deletes its checkpoint dir once the query
+    has stopped, and keeps its sink dir, which the caller reads
+    lazily after the run returns."""
+    import glob
+    import tempfile
+
+    from env_event_stream_spark import streaming_queries as SQ
+    from env_event_stream_spark.tables import load_table
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    ev = SQ._read_events_stream(spark, sf_dir)
+    counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
+    (upd,) = SQ._run_available_now("update", (counts, "gc_upd"))
+    (app,) = SQ._run_available_now(
+        "append", (ev.select("event_id", "event_type"), "gc_app")
+    )
+
+    assert glob.glob(str(tmp_path / "*_ckpt_*")) == []
+    assert len(glob.glob(str(tmp_path / "*_sink_*"))) == 2
+    batch = load_table(spark, sf_dir, "events")
+    want = {
+        r.event_type: r["count"]
+        for r in batch.groupBy("event_type").count().collect()
+    }
+    got = {
+        r.event_type: r.n
+        for r in SQ._latest_epoch_rows(spark, upd, "event_type").collect()
+    }
+    assert got == want and len(got) > 0
+    assert spark.read.parquet(app).count() == batch.count()
